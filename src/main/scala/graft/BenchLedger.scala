@@ -102,7 +102,12 @@ object BenchLedger {
     * reading ~doubles — the exact contention mode that poisons sweep
     * timings. Recorded in every sweep TSV and beside the committed
     * ledger (r11 verdict item 5) so mover adjudication is mechanical,
-    * and consumed by BenchGateSpec's self-skip (r11 verdict item 1). */
+    * and consumed by BenchGateSpec's self-skip (r11 verdict item 1).
+    *
+    * The canary detects CONTENTION, not core count: with one thread
+    * per available core it measures per-core throughput, so an idle
+    * 4-core box reads the same as an idle 32-core one. Which hardware
+    * a ledger came from is the separate [[Shape]] metadata. */
   def canarySecs(): Double = {
     def spin(rounds: Long): Long = {
       var x = 0x9E3779B97F4A7C15L
@@ -140,6 +145,32 @@ object BenchLedger {
         p(0) -> p.lift(1).getOrElse("")
       }.toMap
   }
+
+  /** The hardware shape a sweep ran at: the box's core count
+    * (`availableProcessors`) and the N of the sweep session's
+    * `local[N]`. Timings compare only between equal shapes — an sf0.1
+    * entry at local[32] on 32 cores and at local[32] on 4 cores are
+    * different measurements, and the canary cannot tell them apart. */
+  final case class Shape(cores: Int, parallelism: Int) {
+    def meta: Map[String, String] =
+      Map("cores" -> cores.toString, "parallelism" -> parallelism.toString)
+    override def toString = s"$cores cores, local[$parallelism]"
+  }
+
+  /** The shape recorded in a ledger/sweep file's metadata, if any. */
+  def readShape(path: String): Option[Shape] = {
+    val m = readMeta(path)
+    for (c <- m.get("cores"); p <- m.get("parallelism"))
+      yield Shape(c.toInt, p.toInt)
+  }
+
+  /** Why timings measured at `measured` may not be merged into, or
+    * compared against, a ledger of the `committed` shape; None when
+    * they may. A ledger without a recorded shape (none committed yet)
+    * accepts any. */
+  def shapeMismatch(committed: Option[Shape], measured: Shape): Option[String] =
+    committed.filter(_ != measured)
+      .map(c => s"the ledger was measured at $c, this run at $measured")
 
   private def writeMeta(w: java.io.PrintWriter,
       meta: Map[String, String]): Unit =
@@ -226,8 +257,11 @@ object BenchLedger {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
+  /** Run one isolated-JVM sweep at `local[parallelism]` — set
+    * explicitly, never inherited from the caller's SPARK_GRAFT_CPUS, so
+    * a sweep measures at the shape of the ledger it is compared with. */
   private[graft] def runSweep(sweep: Int, sfDir: String, out: String,
-      only: Option[String]): Unit = {
+      only: Option[String], parallelism: Int): Unit = {
     val javaBin = sys.props("java.home") + "/bin/java"
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "16g")}",
@@ -235,6 +269,7 @@ object BenchLedger {
       "-cp", sys.props("java.class.path"),
       "graft.BenchSweep", sweep.toString, sfDir, out) ++ only.toSeq
     val pb = new ProcessBuilder(cmd: _*)
+    pb.environment().put("SPARK_GRAFT_CPUS", parallelism.toString)
     pb.redirectErrorStream(true)
     val p = pb.start()
     // drain the child's stdout so it can't block on a full pipe; echo
@@ -252,12 +287,32 @@ object BenchLedger {
     val sweeps = sys.env.getOrElse("GRAFT_SWEEPS", "3").toInt
     val only = sys.env.get("GRAFT_SWEEP_ONLY") // comma-joined, dev loop
     val update = sys.env.get("GRAFT_UPDATE_LEDGER").contains("1")
+    // sweeps run at the committed ledger's parallelism; a ledger of
+    // another shape is neither compared against nor merged into (the
+    // check runs before sweeping, and again on what the sweeps recorded)
+    val committedShape = readShape(File)
+    val parallelism = committedShape.map(_.parallelism)
+      .getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    def refuse(why: String): Nothing = {
+      System.err.println(s"[benchledger] REFUSED, $File left unchanged: $why. " +
+        "Timings only compare on the ledger's own shape; to move the ledger " +
+        "to another box, delete it and regenerate it in full there.")
+      sys.exit(2)
+    }
+    val shape = Shape(Runtime.getRuntime.availableProcessors(), parallelism)
+    shapeMismatch(committedShape, shape).foreach(refuse)
     val tmp = java.nio.file.Files.createTempDirectory("graft_benchledger")
     val sweepFiles = (0 until sweeps).map { i =>
       val out = s"$tmp/sweep_$i.tsv"
       System.err.println(s"[benchledger] sweep $i/$sweeps (isolated JVM, seed $i)")
-      runSweep(i, sfDir, out, only)
+      runSweep(i, sfDir, out, only, parallelism)
       out
+    }
+    // a SPARK_GRAFT_MASTER override can run a sweep at another shape
+    // than it was started at
+    sweepFiles.foreach { f =>
+      if (!readShape(f).contains(shape)) refuse(s"sweep $f ran at " +
+        s"${readShape(f).getOrElse("an unrecorded shape")}, not at $shape")
     }
     val perSweep = sweepFiles.map(read)
     // each sweep's child JVM records its own ambient canary (readMeta);
@@ -280,8 +335,9 @@ object BenchLedger {
       // a GRAFT_SWEEP_ONLY top-up (e.g. a newly registered entry)
       // merges into the committed ledger; a full run replaces it
       val next = if (only.isDefined) stored ++ measured else measured
-      val meta = readMeta(File) ++ (if (canaries.nonEmpty)
-        Map("canary" -> fmt3(median(canaries))) else Map.empty)
+      val meta = readMeta(File) ++ shape.meta ++
+        (if (canaries.nonEmpty) Map("canary" -> fmt3(median(canaries)))
+         else Map.empty)
       writeFull(File, next, meta)
       println(s"[benchledger] ledger ${if (only.isDefined) "topped up" else
         "regenerated"}: ${measured.size} measured, ${next.size} total " +
@@ -361,16 +417,19 @@ object BenchSweep {
     }
     spark.sqlContext.clearCache()
     // the sweep's ambient-load context, measured JUST before the timed
-    // pass in this same child JVM: the canary reading plus the 1-min
-    // loadavg go into the TSV header so any later mover adjudication
-    // can see what the box was doing (r11 verdict item 5)
+    // pass in this same child JVM: the canary reading, the 1-min
+    // loadavg and the hardware shape go into the TSV header so any
+    // later mover adjudication can see what the box was doing (r11
+    // verdict item 5) and BenchLedger can refuse unlike hardware
     val canary = BenchLedger.canarySecs()
     val loadavg = scala.util.Try(
       scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0))
       .getOrElse("")
-    println(f"[sweep] seed=$seed canary $canary%.3f s, loadavg $loadavg")
+    val shape = BenchLedger.Shape(Runtime.getRuntime.availableProcessors(),
+      spark.sparkContext.defaultParallelism)
+    println(f"[sweep] seed=$seed canary $canary%.3f s, loadavg $loadavg, $shape")
     val timings = timeEntries(spark, sfDir, names, seed)
-    BenchLedger.write(out, timings,
+    BenchLedger.write(out, timings, shape.meta ++
       Map("canary" -> BenchLedger.fmt3(canary), "loadavg1" -> loadavg))
     println(s"[sweep] seed=$seed done: ${timings.size}/${names.size} entries")
     spark.stop()

@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Protocol — identical to the ledger main's, NOT an in-suite timing:
   * the suite JVM runs local[4] with every other suite's cache wake,
   * so it launches ONE isolated child JVM (same classpath and module
-  * flags, local[32], sf0.1, seeded-random order, warm pass then timed
-  * pass) over the gate slice and applies the committed ledger's
-  * variance-aware dual-gate predicate to the child's measurements.
+  * flags, the ledger's recorded `local[N]` — local[32] for the
+  * committed ledger — never the inherited SPARK_GRAFT_CPUS, sf0.1,
+  * seeded-random order, warm pass then timed pass) over the gate slice
+  * and applies the committed ledger's variance-aware dual-gate
+  * predicate to the child's measurements.
   *
   * Slice: entries with committed median ≥ [[BenchGateSpec.MinMedian]]
   * — the band where a real regression (the r10 etl_profile_table
@@ -38,6 +40,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * failure, so contention that starts mid-gate is also caught. The
   * old manual GRAFT_SKIP_PERF_GATE env knob remains as a dev-loop
   * escape only; contention no longer needs it.
+  *
+  * HARDWARE-SHAPE SELF-SKIP: the canary detects contention, not core
+  * count — an idle 4-core box reads the same as the idle 32-core box
+  * the ledger was measured on, yet its sweep timings are a different
+  * measurement. The ledger records its shape (`# cores`,
+  * `# parallelism`); on a box whose core count differs, the gate
+  * cancels (a loud TestCanceled naming both shapes) instead of
+  * comparing unlike hardware.
   */
 class BenchGateSpec extends AnyFunSuite {
 
@@ -89,6 +99,20 @@ class BenchGateSpec extends AnyFunSuite {
     assert(committedCanary.nonEmpty, s"${BenchLedger.File} carries no " +
       "'# canary' metadata — regen the ledger (GRAFT_UPDATE_LEDGER=1 " +
       "runMain graft.BenchLedger) so the contention self-skip has a baseline")
+    val ledgerShape = BenchLedger.readShape(BenchLedger.File)
+    assert(ledgerShape.nonEmpty, s"${BenchLedger.File} carries no " +
+      "'# cores'/'# parallelism' metadata — the gate cannot know which " +
+      "hardware its medians came from")
+    // the gate's child runs at the ledger's parallelism, so only the
+    // box's core count can differ
+    val boxShape = BenchLedger.Shape(
+      Runtime.getRuntime.availableProcessors(), ledgerShape.get.parallelism)
+    val mismatch = BenchLedger.shapeMismatch(ledgerShape, boxShape)
+    assume(mismatch.isEmpty,
+      s"HARDWARE SHAPE MISMATCH — perf gate cancelled: ${mismatch.getOrElse("")}. " +
+        "The canary detects contention, not core count, so timings from " +
+        "this box would be compared with unlike hardware. Run `sbt test` " +
+        "on a box of the ledger's shape to gate perf.")
     def contended(stage: String): Boolean = {
       val now = BenchLedger.canarySecs()
       val limit = committedCanary.get * BenchLedger.CanaryK
@@ -116,7 +140,8 @@ class BenchGateSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_benchgate")
     def sweep(seed: Int, names: Seq[String]): Map[String, Double] = {
       val out = s"$tmp/gate_$seed.tsv"
-      BenchLedger.runSweep(seed, SfDir, out, Some(names.mkString(",")))
+      BenchLedger.runSweep(seed, SfDir, out, Some(names.mkString(",")),
+        ledgerShape.get.parallelism)
       BenchLedger.read(out)
     }
     val now = sweep(seed = 11, slice)

@@ -120,6 +120,46 @@ class BenchLedgerSpec extends AnyFunSuite {
     assert(BenchLedger.readMeta(g)("canary") === "0.498")
   }
 
+  test("hardware-shape metadata (cores, parallelism) round-trips beside " +
+      "the canary and never leaks into the timing map") {
+    import BenchLedger.{Entry, Shape}
+    val f = java.nio.file.Files.createTempFile("graft_bl_shape", ".tsv").toString
+    BenchLedger.writeFull(f, Map("x" -> Entry(1.0, 0.1)),
+      meta = Shape(32, 16).meta ++ Map("canary" -> "0.765"))
+    assert(BenchLedger.readMeta(f) ===
+      Map("cores" -> "32", "parallelism" -> "16", "canary" -> "0.765"))
+    assert(BenchLedger.readShape(f) === Some(Shape(32, 16)))
+    assert(BenchLedger.readFull(f) === Map("x" -> Entry(1.0, 0.1)))
+    // a file with only one of the two keys has no shape
+    val g = java.nio.file.Files.createTempFile("graft_bl_shape2", ".tsv").toString
+    BenchLedger.write(g, Map("y" -> 2.0), meta = Map("cores" -> "4"))
+    assert(BenchLedger.readShape(g) === None)
+  }
+
+  test("shape match: sweeps merge into or compare against a ledger only " +
+      "at the ledger's own shape") {
+    import BenchLedger.{Shape, shapeMismatch}
+    val big = Shape(32, 32)
+    assert(shapeMismatch(Some(big), big).isEmpty)
+    // same local[32], different box: refused, naming both shapes
+    val why = shapeMismatch(Some(big), Shape(4, 32))
+    assert(why.exists(w => w.contains("32 cores, local[32]") &&
+      w.contains("4 cores, local[32]")))
+    // same box, different parallelism: refused
+    assert(shapeMismatch(Some(big), Shape(32, 8)).nonEmpty)
+    // a ledger with no recorded shape (none committed yet) accepts any
+    assert(shapeMismatch(None, Shape(4, 32)).isEmpty)
+  }
+
+  test("committed ledger records the hardware shape it was measured on") {
+    val shape = BenchLedger.readShape(BenchLedger.File)
+    assert(shape.nonEmpty, s"${BenchLedger.File} has no '# cores' and " +
+      "'# parallelism' metadata — the perf gate cannot tell which " +
+      "hardware its medians came from")
+    assert(shape.get.cores > 0 && shape.get.parallelism > 0,
+      s"shape ${shape.get} outside the sane band")
+  }
+
   test("committed ledger carries the ambient-load canary the perf " +
       "gate's contention self-skip consumes") {
     val canary = BenchLedger.readMeta(BenchLedger.File).get("canary")

@@ -5,6 +5,15 @@ from the inventory. Re-run after any SURVEY §2 change:
 
     python3 tools/gen_catalog.py
 
+The set of entry names comes from the committed plan ledger
+(ledger/plan_fingerprints.tsv), not from the Scala sources: a name that
+is missing from the ledger is silently dropped from the page. After
+adding or renaming entries, regenerate the plan ledger FIRST
+
+    GRAFT_UPDATE_LEDGER=1 sbt "testOnly graft.operators.LedgerSpec"
+
+and only then run this generator.
+
 CatalogSpec asserts every SparkEntry.queries name appears in the
 generated page, so a stale page fails the test suite.
 """
